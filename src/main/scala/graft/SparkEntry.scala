@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.blueprint.{BlueprintParser, Config}
+import graft.blueprint.{BlueprintParser, Config, ResolvedGenerator}
 import graft.functions.Rng
 import graft.operators.{AsOfJoin, Dispatch, Engine, Generators, Replay, Transforms}
 import graft.ext.{Corpus, Dedup, Html, LinkGraph, Multimodal, PiiScan, Similarity, Sitemap, Sketches, TextStats, Warc}
@@ -170,24 +170,27 @@ object SparkEntry {
 
   // === Engine suite: generators / transforms / dispatch =================
 
+  private def gen(s: SparkSession, id: String, shape: String, cfg: Config): DataFrame =
+    Generators.forSpec(s, ResolvedGenerator(id, shape, cfg), Seed)
+
   private val engineQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "g_sinusoidal" -> ((s, _) =>
-      Transforms.intCast(Generators.sinusoidal(s, "ts1",
+      Transforms.intCast(gen(s, "ts1", "sinusoidal",
         Config.of("""{"num_points":600,"frequency":0.25,"signal_min":1,"signal_max":20}""")))
         .orderBy("t")),
 
     "g_constant" -> ((s, _) =>
-      Transforms.intCast(Generators.constant(s, "ts2",
+      Transforms.intCast(gen(s, "ts2", "constant",
         Config.of("""{"num_points":500,"constant":20}""")))
         .orderBy("t")),
 
     "g_square" -> ((s, _) =>
-      Transforms.intCast(Generators.square(s, "ts4",
+      Transforms.intCast(gen(s, "ts4", "square",
         Config.of("""{"num_points":500,"low_value":10,"low_width":10,"high_value":40,"high_width":5}""")))
         .orderBy("t")),
 
     "g_custom" -> ((s, _) =>
-      Transforms.intCast(Generators.custom(s, "ts5",
+      Transforms.intCast(gen(s, "ts5", "custom",
         Config.of("""{"num_points":400,"formula":"(t % 50) + 3 * (t % 7)","signal_min":1,"signal_max":20}""")))
         .orderBy("t")),
 
@@ -200,7 +203,7 @@ object SparkEntry {
     // running extremes — exact, since every value is integer-valued
     // double arithmetic.
     "g_custom_prefix" -> ((s, _) =>
-      Transforms.intCast(Generators.custom(s, "ts5p",
+      Transforms.intCast(gen(s, "ts5p", "custom",
         Config.of("""{"num_points":300,"formula":"1 if t == 0 else (max(datapoints) % 17) + (min(datapoints) % 5) + (len(datapoints) % 3) + (t % 7)","signal_min":1,"signal_max":20}""")))
         .orderBy("t")),
 
@@ -212,7 +215,7 @@ object SparkEntry {
     // RECURSIVE CTE threading (v, prev) through each step — exact,
     // integer-valued double arithmetic throughout.
     "g_custom_lag" -> ((s, _) =>
-      Transforms.intCast(Generators.custom(s, "ts5l",
+      Transforms.intCast(gen(s, "ts5l", "custom",
         Config.of("""{"num_points":300,"formula":"1 if t == 0 else (2 if t == 1 else (datapoints[-1] % 13) + (datapoints[t-2] % 5) + (t % 7))","signal_min":1,"signal_max":20}""")))
         .orderBy("t")),
 
@@ -224,7 +227,7 @@ object SparkEntry {
     // reference-surface indexing form short of arbitrary expressions.
     // Oracle: RECURSIVE CTE threading (v, anchor0, anchor1).
     "g_custom_index" -> ((s, _) =>
-      Transforms.intCast(Generators.custom(s, "ts5i",
+      Transforms.intCast(gen(s, "ts5i", "custom",
         Config.of("""{"num_points":300,"formula":"1 if t == 0 else (2 if t == 1 else (datapoints[0] % 9) + (datapoints[1] % 4) + (datapoints[-1] % 6) + (t % 7))","signal_min":1,"signal_max":20}""")))
         .orderBy("t")),
 
@@ -239,8 +242,8 @@ object SparkEntry {
 
     // Zero-fill alignment of a 300-pt and a 500-pt series (T5).
     "g_zerofill" -> ((s, _) => {
-      val a = Generators.constant(s, "tsa", Config.of("""{"num_points":300,"constant":7}"""))
-      val b = Generators.square(s, "tsb",
+      val a = gen(s, "tsa", "constant", Config.of("""{"num_points":300,"constant":7}"""))
+      val b = gen(s, "tsb", "square",
         Config.of("""{"num_points":500,"low_value":10,"low_width":10,"high_value":40,"high_width":5}"""))
       Transforms.zeroFillAlign(Transforms.intCast(a unionByName b), Seq("tsa", "tsb"), 500L)
         .select("generator_id", "t", "value").orderBy("generator_id", "t")
@@ -251,7 +254,7 @@ object SparkEntry {
 
     // D5 slicing: square wave of 0s and 7s, slice_size 3 → 0→[0], 7→[3,3,1].
     "d_slice" -> ((s, _) => {
-      val sq = Transforms.intCast(Generators.square(s, "tsq",
+      val sq = Transforms.intCast(gen(s, "tsq", "square",
         Config.of("""{"num_points":200,"low_value":0,"low_width":3,"high_value":7,"high_width":2}""")))
       Dispatch.sliceDatapoints(sq, 3L).orderBy("t", "value")
     }),
@@ -285,25 +288,25 @@ object SparkEntry {
 
     // ---- RNG-dependent (rows-only check; semantics pinned by goldens) ----
     "g_random_uniform" -> ((s, _) =>
-      Transforms.intCast(Generators.random(s, "tsr",
-        Config.of("""{"num_points":1000,"type":"uniform","signal_min":1,"signal_max":20}"""), Seed))
+      Transforms.intCast(gen(s, "tsr", "random",
+        Config.of("""{"num_points":1000,"type":"uniform","signal_min":1,"signal_max":20}""")))
         .orderBy("t")),
 
     "g_random_gauss" -> ((s, _) =>
-      Transforms.intCast(Generators.random(s, "tsg",
-        Config.of("""{"num_points":1000,"type":"gauss","mu":10,"sigma":3,"signal_min":1,"signal_max":20}"""), Seed))
+      Transforms.intCast(gen(s, "tsg", "random",
+        Config.of("""{"num_points":1000,"type":"gauss","mu":10,"sigma":3,"signal_min":1,"signal_max":20}""")))
         .orderBy("t")),
 
     "g_noise" -> ((s, _) => {
       val cfg = Config.of("""{"num_points":500,"constant":10,"noise_min":1,"noise_max":5}""")
       Transforms.intCast(Transforms.applyNoise(
-        Generators.constant(s, "tsn", cfg), cfg, Seed)).orderBy("t")
+        gen(s, "tsn", "constant", cfg), cfg, Seed)).orderBy("t")
     }),
 
     "g_anomalies" -> ((s, _) => {
       val cfg = Config.of(AnomaliesCfgJson)
       Transforms.intCast(Transforms.applyAnomalies(
-        Generators.square(s, "tsq", cfg), cfg.anomalies, cfg.numPoints, Seed, "tsq"))
+        gen(s, "tsq", "square", cfg), cfg.anomalies, cfg.numPoints, Seed, "tsq"))
         .orderBy("t")
     }),
 
@@ -436,8 +439,8 @@ object SparkEntry {
     * to 500 slots, pivoted) — shared by d_slots and its d_unpivot
     * inverse so the roundtrip proof can't drift. */
   private def slotsWideTsab(s: SparkSession): DataFrame = {
-    val a = Generators.constant(s, "tsa", Config.of("""{"num_points":300,"constant":5}"""))
-    val b = Generators.square(s, "tsb",
+    val a = gen(s, "tsa", "constant", Config.of("""{"num_points":300,"constant":5}"""))
+    val b = gen(s, "tsb", "square",
       Config.of("""{"num_points":500,"low_value":10,"low_width":10,"high_value":40,"high_width":5}"""))
     Transforms.zeroFillAlign(Transforms.intCast(a unionByName b), Seq("tsa", "tsb"), 500L)
       .groupBy("t").pivot("generator_id", Seq("tsa", "tsb")).agg(first("value"))

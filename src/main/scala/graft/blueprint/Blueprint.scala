@@ -145,6 +145,10 @@ object BlueprintParser {
           shape = g.get("shape").asText(),
           config = Config(commons ++ own))
       }
+    // every step after generation is keyed by generator id
+    val ids = generators.map(_.id)
+    ids.diff(ids.distinct).headOption.foreach(id =>
+      throw new IllegalArgumentException(s"blueprint has more than one generator with id '$id'"))
 
     val targets = Option(root.get("targets")).toSeq
       .flatMap(_.elements().asScala)

@@ -108,7 +108,7 @@ object Formula {
     case Call("min", List(Ref("datapoints"))) => col(DpMinCol)
     case Call("len", List(Ref("datapoints"))) => col(DpLenCol)
     case Lag(_) | Idx(_) =>
-      // unreachable through Generators.custom (usesPrefix dispatches
+      // unreachable through Generators.generate (usesPrefix dispatches
       // indexing formulas to the fold path) — defensive for direct callers
       throw new IllegalArgumentException(
         "datapoints[...] indexing needs the prefix evaluation path (evalPrefix)")
@@ -223,9 +223,9 @@ object Formula {
   def evalPrefix(ast: Ast, t: Long, prefixLen: Long,
       prefixMax: => Double, prefixMin: => Double,
       lagAt: Int => Double = k => throw new IllegalArgumentException(
-        s"datapoints[-$k] needs a lag-carrying evaluator (Generators.custom wires one)"),
+        s"datapoints[-$k] needs a lag-carrying evaluator (Generators.generate wires one)"),
       idxAt: Int => Double = j => throw new IllegalArgumentException(
-        s"datapoints[$j] needs an anchor-carrying evaluator (Generators.custom wires one)")): Double = {
+        s"datapoints[$j] needs an anchor-carrying evaluator (Generators.generate wires one)")): Double = {
     def num(a: Ast): Double = a match {
       case Num(v)   => v
       case Ref("t") => t.toDouble

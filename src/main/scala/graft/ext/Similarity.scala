@@ -259,7 +259,9 @@ object Similarity {
     // before recompute". Partitioning stays as planned (no coalesce):
     // at corpus scale the per-iteration aggregation rides the scan's
     // real parallelism.
-    val c = corpus.select(col(idCol), col(vecCol)).localCheckpoint()
+    // The assignment below would count a null vector into cell 0:
+    // drop it, so it seeds no centroid and joins no cell.
+    val c = corpus.select(col(idCol), col(vecCol)).where(col(vecCol).isNotNull).localCheckpoint()
     var centroids: Array[Seq[Double]] = c
       .orderBy(graft.functions.Rng.uniform(seed, "ivf/init", col(idCol)), col(idCol))
       .limit(nCentroids)
@@ -371,7 +373,8 @@ object Similarity {
     // Bounded partition count: the training frame is index-build-sized
     // (a sample at corpus scale), and every Lloyd job pays per-task
     // overhead — 8 tasks beat 200 for a frame this shape.
-    val base = corpus.select(col(idCol),
+    // a null vector's slice is all-null, yet would be coded and counted
+    val base = corpus.where(col(vecCol).isNotNull).select(col(idCol),
         pqNormSlice(col(vecCol), nrm, 0, dims).as("__vn"))
       .coalesce(8).localCheckpoint()
     // md5-ranked init: the SAME member rows for every subspace

@@ -6,38 +6,18 @@ import graft.blueprint.Blueprint
 
 /**
  * End-to-end materialization — the Spark analog of the reference's
- * `generate_datapoints` (src/main.py:643-665): per generator
- * generate → noise → anomalies → int-cast, union'd into ONE long frame
- * `(generator_id, t, value LONG)` so Catalyst sees a single fused plan
- * per blueprint.
+ * `generate_datapoints` (src/main.py:643-665): generate → scale → noise →
+ * anomalies → int-cast, each step once over all generators keyed by
+ * `generator_id`, into ONE long frame `(generator_id, t, value LONG)`.
  */
 object Engine {
 
+  /** The blueprint's series; lazy — nothing runs until it is used. */
   def materialize(spark: SparkSession, bp: Blueprint, seed: Long): DataFrame = {
     require(bp.generators.nonEmpty, "blueprint has no generators")
-    // Plan-size control at high generator counts: a blueprint is one
-    // frame per generator union'd together, which is fine at 6
-    // generators but makes Catalyst chew a 10,000-branch union at
-    // fleet scale. Square/constant generators without noise/anomalies
-    // are pure functions of (t, params), so they collapse into ONE
-    // range scan × broadcast parameter table ([[Generators.squareBulk]]).
-    val (bulkable, individual) = bp.generators.partition { g =>
-      (g.shape == "square" || g.shape == "constant") &&
-        !g.config.noiseEnabled && g.config.anomalies.isEmpty
-    }
-    val bulkFrame =
-      if (bulkable.isEmpty) Nil
-      else Seq(Transforms.intCast(Generators.squareBulk(spark, bulkable))
-        .select(col(Transforms.Gid), col("t"), col("value")))
-    val perGen = individual.map { gen =>
-      val raw = Generators.forSpec(spark, gen, seed)
-      val noised = Transforms.applyNoise(raw, gen.config, seed)
-      val withAnomalies = Transforms.applyAnomalies(
-        noised, gen.config.anomalies, gen.config.numPoints, seed, gen.id)
-      Transforms.intCast(withAnomalies)
-        .select(col(Transforms.Gid), col("t"), col("value"))
-    }
-    (bulkFrame ++ perGen).reduce(_ unionByName _)
+    val gens = bp.generators
+    Transforms.intCast(Transforms.anomalies(
+      Transforms.noise(Generators.generate(spark, gens, seed), gens, seed), gens, seed))
   }
 
   /**
@@ -62,14 +42,14 @@ object Engine {
    *    `slice_size`, grouped mode per `group_datapoints`)
    *
    * Returned keyed by target index (targets have no ids in the
-   * reference). One materialized series frame feeds every target —
-   * Catalyst reuses the plan; at scale, persist `series` first.
+   * reference). The series is computed once per call (one eager local
+   * checkpoint), and every target frame reads from it.
    */
   def execute(spark: SparkSession, bp: Blueprint, seed: Long,
       timestamp: Column = date_format(current_timestamp(), "yyyy-MM-dd HH:mm:ss").cast("timestamp"))
       : Seq[(Int, String, DataFrame)] = {
     import graft.sources.Sinks
-    val series = Engine.materialize(spark, bp, seed)
+    val series = materialize(spark, bp, seed).localCheckpoint()
     bp.targets.zipWithIndex.map { case (target, i) =>
       val routed = Dispatch.routeToTarget(series, target)
       val sliceSize = target.raw.long("slice_size", 0L)

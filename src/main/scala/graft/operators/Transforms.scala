@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.blueprint.{AnomalySpec, Config}
+import org.apache.spark.sql.types.StructType
+import graft.blueprint.{AnomalySpec, Config, ResolvedGenerator}
 import graft.dsl.Formula
 import graft.functions.Rng
 
@@ -31,19 +33,24 @@ object Transforms {
    *    and C libm `sin` may differ in the last ulp; without quantization
    *    a 1-ulp difference at the series argmin flips `ceil` by 1).
    */
-  def scaleRange(df: DataFrame, lo: Double, hi: Double): DataFrame = {
-    val stats = df.groupBy(Gid)
-      .agg(min("value").as("__mn"), max("value").as("__mx"))
+  def scaleRange(df: DataFrame, lo: Double, hi: Double): DataFrame =
+    rescale(df, "value", lit(lo), lit(hi))
+
+  /** [[scaleRange]] of column `c` to per-row bound columns: rows whose
+    * bounds are null (a generator left unscaled) keep `c`. */
+  private[operators] def rescale(df: DataFrame, c: String, lo: Column, hi: Column): DataFrame = {
+    val stats = df.groupBy(Gid).agg(min(c).as("__mn"), max(c).as("__mx"))
     df.join(broadcast(stats), Gid)
-      .withColumn("value", scaledExpr(col("value"), col("__mn"), col("__mx"), lo, hi))
+      .withColumn(c, when(lo.isNotNull,
+        scaledExpr(col(c), col("__mn"), col("__mx"), lo, hi)).otherwise(col(c)))
       .drop("__mn", "__mx")
   }
 
   /** The scale expression itself, reusable on any column. */
-  def scaledExpr(v: Column, mn: Column, mx: Column, lo: Double, hi: Double): Column = {
+  def scaledExpr(v: Column, mn: Column, mx: Column, lo: Column, hi: Column): Column = {
     val std = (v - mn) / (mx - mn)
-    val scaled = std * lit(hi - lo) + lit(lo)
-    when(mx === mn, lit(lo).cast("double"))
+    val scaled = std * (hi - lo) + lo
+    when(mx === mn, lo.cast("double"))
       .otherwise(ceil(round(scaled, 9)).cast("double"))
   }
 
@@ -54,21 +61,29 @@ object Transforms {
    * add, clamp at 0. Disabled unless both bounds are nonzero (the
    * truthiness gate at src/main.py:599).
    */
-  def applyNoise(df: DataFrame, cfg: Config, seed: Long): DataFrame = {
-    if (!cfg.noiseEnabled) df
+  def applyNoise(df: DataFrame, cfg: Config, seed: Long): DataFrame =
+    if (!cfg.noiseEnabled) df else noiseWhere(df, seed, lit(cfg.noiseMin), lit(cfg.noiseMax))
+
+  /** [[applyNoise]] for every generator of `gens` at once, keyed by
+    * `generator_id`: each one's bounds come from a broadcast table. */
+  def noise(df: DataFrame, gens: Seq[ResolvedGenerator], seed: Long): DataFrame = {
+    val noisy = gens.filter(_.config.noiseEnabled)
+    if (noisy.isEmpty) df
     else {
-      val noisy = df.withColumn("__noise",
-        Rng.gaussian(seed, "noise", col(Gid), col("t")))
-      val stats = noisy.groupBy(Gid)
-        .agg(min("__noise").as("__nmn"), max("__noise").as("__nmx"))
-      noisy.join(broadcast(stats), Gid)
-        .withColumn("__noise",
-          scaledExpr(col("__noise"), col("__nmn"), col("__nmx"),
-            cfg.noiseMin, cfg.noiseMax))
-        .withColumn("value", greatest(lit(0.0), col("value") + col("__noise")))
-        .drop("__noise", "__nmn", "__nmx")
+      val bounds = localTable(df.sparkSession, s"$Gid STRING, __nlo DOUBLE, __nhi DOUBLE",
+        noisy.map(g => Seq(g.id, g.config.noiseMin, g.config.noiseMax)))
+      noiseWhere(df.join(broadcast(bounds), Seq(Gid), "left"), seed, col("__nlo"), col("__nhi"))
+        .drop("__nlo", "__nhi")
     }
   }
+
+  /** Noise with per-row bound columns; rows with null bounds draw none. */
+  private def noiseWhere(df: DataFrame, seed: Long, lo: Column, hi: Column): DataFrame =
+    rescale(df.withColumn("__noise",
+      when(lo.isNotNull, Rng.gaussian(seed, "noise", col(Gid), col("t")))), "__noise", lo, hi)
+      .withColumn("value", when(lo.isNotNull, greatest(lit(0.0), col("value") + col("__noise")))
+        .otherwise(col("value")))
+      .drop("__noise")
 
   /**
    * Anomaly injection — reference `apply_anomalies` (src/main.py:606-641).
@@ -86,11 +101,13 @@ object Transforms {
    * sampled-slot table is `counts` rows, broadcast into the join.
    */
   def applyAnomalies(df: DataFrame, specs: Seq[AnomalySpec], numPoints: Long,
-      seed: Long, generatorId: String): DataFrame = {
-    specs.zipWithIndex.foldLeft(df) { case (cur, (spec, i)) =>
-      applyOneAnomaly(cur, spec, numPoints, seed, generatorId, i)
-    }
-  }
+      seed: Long, generatorId: String): DataFrame =
+    injectAnomalies(df, Seq((generatorId, numPoints, specs)), seed)
+
+  /** [[applyAnomalies]] for every generator of `gens` at once: the i-th
+    * spec of all generators is one step, keyed by `generator_id`. */
+  def anomalies(df: DataFrame, gens: Seq[ResolvedGenerator], seed: Long): DataFrame =
+    injectAnomalies(df, gens.map(g => (g.id, g.config.numPoints, g.config.anomalies)), seed)
 
   /**
    * The deterministic anomaly slot draws (uniform inclusive, with
@@ -114,35 +131,42 @@ object Transforms {
       .distinct
   }
 
-  private def applyOneAnomaly(df: DataFrame, spec: AnomalySpec, n: Long,
-      seed: Long, generatorId: String, specIdx: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val start = math.min(spec.start.getOrElse(0L), n - 1)
-    val end = math.min(spec.end.getOrElse(n - 1), n - 1)
-    if (spec.counts <= 0 || end < start) return df
-
-    val slots = anomalySlots(spec, n, seed, generatorId, specIdx)
-    val slotDf = slots.toDF("t").withColumn("__anom", lit(true))
-
-    // Pre-injection aggregates feed datapoint_max / max(datapoints) refs.
-    val stats = df.groupBy(Gid).agg(
-      floor(max("value")).cast("double").as(Formula.DpMaxCol), // int(np.max(..))
-      min("value").as(Formula.DpMinCol),
-      count("*").cast("double").as(Formula.DpLenCol))
-
-    val formulaCol: Column = spec.formula match {
-      case Some(src) => Formula.compile(src)
-      case None      => pow(col(Formula.DpMaxCol) + lit(1.0), 2.0)
+  /** Step `i` injects every generator's spec `i`: a `(generator_id, t,
+    * formula)` slot table joined on `(generator_id, t)`. */
+  private def injectAnomalies(df: DataFrame,
+      plans: Seq[(String, Long, Seq[AnomalySpec])], seed: Long): DataFrame = {
+    val steps = plans.map(_._3.length).foldLeft(0)(math.max)
+    (0 until steps).foldLeft(df) { (cur, i) =>
+      val specs = plans.flatMap { case (gid, n, s) => s.lift(i).map((gid, n, _)) }
+      val formulas = specs.map(_._3.formula).distinct
+      val slots = specs.flatMap { case (gid, n, spec) =>
+        anomalySlots(spec, n, seed, gid, i).map(t => Seq(gid, t, formulas.indexOf(spec.formula)))
+      }
+      if (slots.isEmpty) cur
+      else {
+        // Pre-injection aggregates feed datapoint_max / max(datapoints) refs.
+        val stats = cur.groupBy(Gid).agg(
+          floor(max("value")).cast("double").as(Formula.DpMaxCol), // int(np.max(..))
+          min("value").as(Formula.DpMinCol),
+          count("*").cast("double").as(Formula.DpLenCol))
+        val formulaCol = Generators.caseOf(col("__formula"), formulas.indices) { f =>
+          formulas(f).map(Formula.compile)
+            .getOrElse(pow(col(Formula.DpMaxCol) + lit(1.0), 2.0)).cast("double")
+        }
+        val slotDf = localTable(cur.sparkSession, s"$Gid STRING, t BIGINT, __formula INT", slots)
+        cur.join(broadcast(stats), Gid)
+          .join(broadcast(slotDf), Seq(Gid, "t"), "left")
+          .withColumn("value",
+            when(col("__formula").isNotNull, formulaCol).otherwise(col("value")))
+          .drop("__formula", Formula.DpMaxCol, Formula.DpMinCol, Formula.DpLenCol)
+      }
     }
-
-    df.join(broadcast(stats), Gid)
-      .join(broadcast(slotDf), Seq("t"), "left")
-      .withColumn("value",
-        when(col("__anom").isNotNull, formulaCol.cast("double"))
-          .otherwise(col("value")))
-      .drop("__anom", Formula.DpMaxCol, Formula.DpMinCol, Formula.DpLenCol)
   }
+
+  /** A driver-side table with a DDL schema: no encoder derived by Scala
+    * reflection, which fails under class loaders such as the sbt console's. */
+  private[operators] def localTable(spark: SparkSession, ddl: String, rows: Seq[Seq[Any]]): DataFrame =
+    spark.createDataFrame(rows.map(Row.fromSeq).asJava, StructType.fromDDL(ddl))
 
   /**
    * Final int cast — reference `np.array(v).astype(int)` truncation toward

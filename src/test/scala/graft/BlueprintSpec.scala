@@ -94,4 +94,16 @@ class BlueprintSpec extends AnyFunSuite with Matchers {
       dir.listFiles().foreach(_.delete()); dir.delete()
     }
   }
+
+  test("duplicate generator ids are rejected at parse, naming the id") {
+    val ex = intercept[IllegalArgumentException] {
+      BlueprintParser.parse(
+        """{"generators":[
+          |  {"id":"a","shape":"constant","config":{"constant":1}},
+          |  {"id":"dup","shape":"constant","config":{"constant":2}},
+          |  {"id":"dup","shape":"square","config":{}}],
+          | "targets":[{"type":"cloudwatch","generators":["a","dup"]}]}""".stripMargin)
+    }
+    ex.getMessage should include("'dup'")
+  }
 }

@@ -54,7 +54,7 @@ class DistributionSpec extends SparkSpec {
   }
 
   /** Column-expression distributions, evaluated unscaled via the same
-    * inverse-CDF/transform columns Generators.random uses. */
+    * inverse-CDF/transform columns random generators use. */
   private def columnDraws(valueCol: org.apache.spark.sql.Column): Seq[Double] =
     spark.range(N).toDF("t")
       .withColumn("generator_id", lit("d"))
@@ -104,8 +104,8 @@ class DistributionSpec extends SparkSpec {
     val cfg = Config.of(
       """{"num_points":2000,"type":"gammavariate","alpha":2,"beta":2,
         | "signal_min":1,"signal_max":20}""".stripMargin)
-    val a = seriesOf(Generators.random(spark, "g", cfg, 9L))
-    val b = seriesOf(Generators.random(spark, "g", cfg, 9L).repartition(11))
+    val a = seriesOf(Generators.forSpec(spark, graft.blueprint.ResolvedGenerator("g", "random", cfg), 9L))
+    val b = seriesOf(Generators.forSpec(spark, graft.blueprint.ResolvedGenerator("g", "random", cfg), 9L).repartition(11))
     a shouldBe b
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.blueprint.BlueprintParser
-import graft.operators.{Dispatch, Engine}
+import graft.operators.{Dispatch, Engine, Generators, Transforms}
 import graft.sources.Sinks
 
 /** End-to-end materialization (EP2, SURVEY §3) + sinks + the driver
@@ -97,27 +97,37 @@ class EngineSpec extends SparkSpec {
     all(metrics.map(_.getAs[String]("metric_name")).toSeq) shouldBe "Timeseries"
   }
 
-  test("bulk generation: square/constant fleet collapses to one range scan, same values") {
-    val gens = (0 until 40).map { i =>
-      if (i % 2 == 0)
-        s"""{"id":"g$i","shape":"constant","config":{"num_points":${50 + i},"constant":$i}}"""
-      else
-        s"""{"id":"g$i","shape":"square","config":{"num_points":${50 + i},"low_value":$i,"low_width":2,"high_value":${i * 3},"high_width":3}}"""
-    }.mkString(",")
-    val bp = BlueprintParser.parse(s"""{"generators":[$gens],"targets":[]}""")
-    val bulk = Engine.materialize(spark, bp, 42L)
-    // one range scan in the whole plan (not 40)
-    val nRanges = "Range \\(".r.findAllIn(bulk.queryExecution.executedPlan.toString).length
-    nRanges shouldBe 1
-    // values identical to the per-generator path
-    val g7 = bulk.where($"generator_id" === "g7").orderBy("t")
-      .collect().map(_.getLong(2)).toSeq
-    val expected = graft.operators.Transforms.intCast(
-      graft.operators.Generators.square(spark, "g7",
-        graft.blueprint.Config.of("""{"num_points":57,"low_value":7,"low_width":2,"high_value":21,"high_width":3}""")))
-      .orderBy("t").collect().map(_.getLong(2)).toSeq
-    g7 shouldBe expected
-    bulk.count() shouldBe (0 until 40).map(50 + _).sum.toLong
+  test("mixed fleet: every generator's rows equal its own single-generator run") {
+    // every synthesized shape, random types incl. a UDF sampler and the
+    // unscaled triangular, a prefix-referencing formula, commons noise
+    // and anomalies (one generator opts out of noise), and one generator
+    // overriding both with its own specs and formula
+    val bp = BlueprintParser.parse(
+      """{"commons": {"num_points": 120, "signal_min": 1, "signal_max": 30,
+        |             "noise_min": 1, "noise_max": 4,
+        |             "anomalies": {"start": 5, "end": 60, "counts": 4}},
+        | "generators": [
+        |  {"id":"sin","shape":"sinusoidal","config":{"frequency":0.1,"amplitude":3}},
+        |  {"id":"con","shape":"constant","config":{"num_points":40,"constant":6,"noise_min":0}},
+        |  {"id":"sq","shape":"square","config":{"low_value":2,"low_width":3,"high_value":9,"high_width":4}},
+        |  {"id":"uni","shape":"random","config":{"type":"uniform"}},
+        |  {"id":"gam","shape":"random","config":{"type":"gammavariate","alpha":2,"beta":3}},
+        |  {"id":"tri","shape":"random","config":{"type":"triangular","num_points":90}},
+        |  {"id":"gau","shape":"random","config":{"type":"gauss","mu":4,"sigma":2}},
+        |  {"id":"cus","shape":"custom","config":{"formula":"(t % 13) + 2 * (t % 5)"}},
+        |  {"id":"pre","shape":"custom","config":{"formula":"1 if t == 0 else (max(datapoints) % 11) + (t % 7)"}},
+        |  {"id":"own","shape":"custom","config":{"formula":"t * 3","noise_min":2,"noise_max":8,
+        |    "anomalies":[{"start":0,"end":30,"counts":3,"formula":"max(datapoints) + t"},{"counts":2}]}}],
+        | "targets": []}""".stripMargin)
+    val fleet = Engine.materialize(spark, bp, 7L).cache()
+    fleet.count() shouldBe bp.generators.map(_.config.numPoints).sum
+    for (g <- bp.generators) withClue(s"${g.id}: ") {
+      val alone = Transforms.intCast(Transforms.applyAnomalies(
+        Transforms.applyNoise(Generators.forSpec(spark, g, 7L), g.config, 7L),
+        g.config.anomalies, g.config.numPoints, 7L, g.id))
+      longSeriesOf(fleet.where($"generator_id" === g.id)) shouldBe longSeriesOf(alone)
+    }
+    fleet.unpersist()
   }
 
   test("execute: full blueprint → one activity frame per target (EP2+EP3)") {

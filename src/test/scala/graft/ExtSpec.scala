@@ -2795,4 +2795,27 @@ class ExtSpec extends SparkSpec {
       (1, false, false, false, false),
       (1, false, true, false, true))
   }
+
+  /** 60 seeded 4-dim vectors around three centres, and the same corpus
+    * with four null-vector rows added. */
+  private def nullVectorCorpora = {
+    val rnd = new scala.util.Random(5)
+    val clean = (0L until 60L).map { i =>
+      (i, Array.fill(4)((i % 3) * 4.0 + rnd.nextGaussian()))
+    }.toDF("vec_id", "embedding")
+    (clean, clean.union(
+      Seq(100L, 101L, 102L, 103L).map(i => (i, null: Array[Double])).toDF("vec_id", "embedding")))
+  }
+
+  test("IVF training skips null vectors: centroids match the null-free corpus") {
+    val (clean, withNulls) = nullVectorCorpora
+    Similarity.trainIvfCentroids(withNulls, nCentroids = 3).toSeq shouldBe
+      Similarity.trainIvfCentroids(clean, nCentroids = 3).toSeq
+  }
+
+  test("PQ training skips null vectors: codebooks match the null-free corpus") {
+    val (clean, withNulls) = nullVectorCorpora
+    Similarity.pqTrain(withNulls, m = 2, k = 2, dims = 4).map(_.toSeq).toSeq shouldBe
+      Similarity.pqTrain(clean, m = 2, k = 2, dims = 4).map(_.toSeq).toSeq
+  }
 }

@@ -140,8 +140,8 @@ class FormulaSpec extends SparkSpec {
     // ring (lag 3) mixing both spellings, exercising wraparound
     import graft.blueprint.Config
     import graft.operators.Generators
-    val out = Generators.custom(spark, "gl",
-      Config.of("""{"num_points":60,"formula":"t + 1 if t < 3 else (datapoints[-1] % 11) + (datapoints[t-3] % 4) + (t % 5)","signal_min":1,"signal_max":10}"""))
+    val out = Generators.forSpec(spark, graft.blueprint.ResolvedGenerator("gl", "custom",
+      Config.of("""{"num_points":60,"formula":"t + 1 if t < 3 else (datapoints[-1] % 11) + (datapoints[t-3] % 4) + (t % 5)","signal_min":1,"signal_max":10}""")), 0L)
     val dps = scala.collection.mutable.ArrayBuffer.empty[Double]
     (0 until 60).foreach { t =>
       dps += (if (t < 3) t + 1.0
@@ -192,8 +192,8 @@ class FormulaSpec extends SparkSpec {
     // and 2 next to lag 1
     import graft.blueprint.Config
     import graft.operators.Generators
-    val out = Generators.custom(spark, "gi",
-      Config.of("""{"num_points":60,"formula":"t + 2 if t < 3 else (datapoints[0] % 7) + (datapoints[2] % 3) + (datapoints[-1] % 11) + (t % 5)","signal_min":1,"signal_max":10}"""))
+    val out = Generators.forSpec(spark, graft.blueprint.ResolvedGenerator("gi", "custom",
+      Config.of("""{"num_points":60,"formula":"t + 2 if t < 3 else (datapoints[0] % 7) + (datapoints[2] % 3) + (datapoints[-1] % 11) + (t % 5)","signal_min":1,"signal_max":10}""")), 0L)
     val dps = scala.collection.mutable.ArrayBuffer.empty[Double]
     (0 until 60).foreach { t =>
       dps += (if (t < 3) t + 2.0
@@ -209,8 +209,8 @@ class FormulaSpec extends SparkSpec {
   test("custom-shape generator runs prefix formulas as a per-generator fold") {
     import graft.blueprint.Config
     import graft.operators.{Generators, Transforms}
-    val out = Generators.custom(spark, "gp",
-      Config.of("""{"num_points":50,"formula":"2 if t == 0 else max(datapoints) + 1 if t % 2 == 0 else min(datapoints) - 1","signal_min":1,"signal_max":10}"""))
+    val out = Generators.forSpec(spark, graft.blueprint.ResolvedGenerator("gp", "custom",
+      Config.of("""{"num_points":50,"formula":"2 if t == 0 else max(datapoints) + 1 if t % 2 == 0 else min(datapoints) - 1","signal_min":1,"signal_max":10}""")), 0L)
     // reference loop: v0=2; even t: max+1, odd t: min-1 — alternating
     // growth of both extremes; replicate and scale the same way
     val dps = scala.collection.mutable.ArrayBuffer(2.0)

@@ -1315,4 +1315,49 @@ class ScaleSpec extends SparkSpec {
     plan2 should include("Window")
     plan2 should include regex "windowspecdefinition\\(component"
   }
+
+  /** `n` generators cycling through one shape mix — sinusoidal, a
+    * gamma-sampled random, a prefix-free and a prefix-referencing custom
+    * formula, a square wave — with per-generator parameters and formulas,
+    * commons noise and anomalies, a cloudwatch and a grouped lambda
+    * target over all of them. */
+  private def mixedFleet(n: Int, points: Int): graft.blueprint.Blueprint = {
+    val gens = (0 until n).map { i =>
+      val cfg = i % 5 match {
+        case 0 => s""""sinusoidal","config":{"frequency":0.0${1 + i % 9}}"""
+        case 1 => s""""random","config":{"type":"gammavariate","alpha":${1 + i % 4},"beta":2}"""
+        case 2 => s""""custom","config":{"formula":"(t % ${5 + i}) + 2"}"""
+        case 3 => s""""custom","config":{"formula":"1 if t == 0 else (max(datapoints) % ${3 + i}) + (t % 4)"}"""
+        case _ => s""""square","config":{"low_value":1,"low_width":${1 + i % 3},"high_value":${i},"high_width":2}"""
+      }
+      s"""{"id":"g$i","shape":$cfg}"""
+    }
+    val ids = (0 until n).map(i => s""""g$i"""").mkString("[", ",", "]")
+    graft.blueprint.BlueprintParser.parse(
+      s"""{"commons":{"num_points":$points,"noise_min":1,"noise_max":3,
+         |            "anomalies":{"start":2,"end":20,"counts":2}},
+         | "generators":[${gens.mkString(",")}],
+         | "targets":[{"type":"cloudwatch","generators":$ids},
+         |            {"type":"lambda","group_datapoints":true,"generators":$ids}]}""".stripMargin)
+  }
+
+  test("materialize: plan size and range scans do not grow with generator count") {
+    import org.apache.spark.sql.execution.RangeExec
+    def shape(n: Int): (Int, Int) = {
+      val plan = graft.operators.Engine.materialize(spark, mixedFleet(n, 50), 1L)
+        .queryExecution.sparkPlan
+      (plan.collect { case p => p }.size, plan.collect { case r: RangeExec => r }.size)
+    }
+    val (nodes5, ranges5) = shape(5)
+    shape(500) shouldBe ((nodes5, ranges5))
+  }
+
+  test("execute: a 200-generator × 2,016-point blueprint runs to completion") {
+    val bp = mixedFleet(200, 2016)
+    val frames = graft.operators.Engine.execute(spark, bp, 1L,
+      to_timestamp(lit("2026-01-01 00:00:00")))
+    frames.map(_._2) shouldBe Seq("cloudwatch", "lambda")
+    frames(0)._3.count() shouldBe 200L * 2016L // one metric row per point
+    frames(1)._3.count() shouldBe 2016L        // one grouped envelope per slot
+  }
 }
